@@ -1,6 +1,31 @@
 package graft
 import java.nio.file.{Files, Paths}
 object Bench {
+  /** Sweep pins from bench_pins_sf001.json: (query → cal-units, slack).
+    * "slack" and "_"-prefixed keys are file metadata, not pins.
+    */
+  private[graft] def parsePins(txt: String): (Map[String, Double], Double) = {
+    val slack = "\"slack\"\\s*:\\s*([0-9.]+)".r.findFirstMatchIn(txt)
+      .map(_.group(1).toDouble).getOrElse(2.5)
+    val entry = "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r
+    val units = entry.findAllMatchIn(txt)
+      .map(m => m.group(1) -> m.group(2).toDouble)
+      .filter(m => m._1 != "slack" && !m._1.startsWith("_")).toMap
+    (units, slack)
+  }
+
+  /** The driver keeps only the last ~2000 stdout chars, so the final
+    * line must stay whole inside that tail.
+    */
+  private[graft] val FinalLineMaxChars = 1800
+
+  private[graft] def checkedFinalLine(line: String): String = {
+    require(line.length < FinalLineMaxChars,
+      s"final Bench line is ${line.length} chars (bound $FinalLineMaxChars): " +
+        "the driver would parse a truncated line")
+    line
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
@@ -237,16 +262,8 @@ object Bench {
     val (sweepPins, sweepSlack): (Map[String, Double], Double) = {
       val p = Paths.get("bench_pins_sf001.json")
       if (!Files.isRegularFile(p)) (Map.empty, 0.0)
-      else try {
-        val txt = Files.readString(p)
-        val slack = "\"slack\"\\s*:\\s*([0-9.]+)".r.findFirstMatchIn(txt)
-          .map(_.group(1).toDouble).getOrElse(2.5)
-        val entry = "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r
-        val units = entry.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble)
-          .filter(_._1 != "slack").toMap
-        (units, slack)
-      } catch { case _: Exception => (Map.empty, 0.0) }
+      else try parsePins(Files.readString(p))
+      catch { case _: Exception => (Map.empty, 0.0) }
     }
     // 1.0-cal-unit noise floor: sub-200ms spans jitter 2-3×
     // multiplicatively (JIT/GC/disk cache), so a tiny query only
@@ -419,7 +436,7 @@ object Bench {
     val isoByName = isolated.map(r => r._1 -> r._2).toMap
     val fixedQs = fixedReport.flatMap(k => isoByName.get(k).flatten.map(v =>
       "\"" + k + "\":" + fmt2(v))).mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fixedQs,"n_queries":${results.size},"isolated":$iso,"engine":$engJson,"sweep":$sweepSummary,"sweep_failed":$sweepFailed,"sweep_cal_sec":${fmt(sweepCal)},"cal_sec":${fmt(cal)},"regressions":$regressions,"failed":$failedAll,"sf":"$sfDir","queries_file":"BENCH_full_latest.json"}""")
+    println(checkedFinalLine(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fixedQs,"n_queries":${results.size},"isolated":$iso,"engine":$engJson,"sweep":$sweepSummary,"sweep_failed":$sweepFailed,"sweep_cal_sec":${fmt(sweepCal)},"cal_sec":${fmt(cal)},"regressions":$regressions,"failed":$failedAll,"sf":"$sfDir","queries_file":"BENCH_full_latest.json"}"""))
     swSpark.stop()
   }
 }

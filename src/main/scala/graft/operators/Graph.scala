@@ -81,9 +81,129 @@ object Graph {
     * similarity graph (minhash pairs, embedding-cosine pairs, explicit
     * edges) can be clustered with the same engine.
     *
-    * Iterative min-label propagation with pointer jumping: each round
-    * every vertex takes the min of its own and its neighbors' labels,
-    * then compresses one indirection (label ← label-of-label), so
+    * Two paths, one contract: `(doc_id, cluster_id)` rows, one per
+    * vertex that appears in a pair, labeled with its component's
+    * minimum id. Min-id labels are unique, so both paths return the
+    * same rows; which one runs depends only on the edge set.
+    *  - Driver ([[minIdLabels]]): after the edge cut is materialized,
+    *    one job collects at most threshold/16 + 1 edges. If the whole
+    *    edge set fits `spark.sql.autoBroadcastJoinThreshold` at 16
+    *    bytes per pair of longs — a relation Spark would already pull
+    *    to the driver to broadcast it — union-find solves it in memory
+    *    (MapReduce Algorithms for Big Data Analysis, VLDB 2012: once the
+    *    graph fits one machine, finish there) and the labels come back
+    *    as a local DataFrame. A 700-vertex graph costs one job instead
+    *    of ~9 per label-propagation round.
+    *  - Distributed ([[labelPropagation]]): larger graphs, non-long or
+    *    null ids, and a threshold of -1 run the iterative loop.
+    */
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
+    // Materialized: the symmetrizing union in the loop consumes `pairs`
+    // in BOTH branches, and only exchange-rooted subtrees are reused — a
+    // pair pipeline ending in a join+filter (embedding-cosine pairs:
+    // the exact-cosine verification) would run twice without the cut.
+    // The driver path's collect job computes the cut, so a graph too
+    // big for the driver reuses the blocks it left behind.
+    val edges = pairs.select(col("doc_a"), col("doc_b"))
+      .materialized
+    smallEdgeList(edges) match {
+      case Some(flat) =>
+        checkpointRdd(edges).foreach(_.unpersist(blocking = false))
+        minIdLabels(edges, flat)
+      case None => labelPropagation(edges, maxIters)
+    }
+  }
+
+  /** The edge list as flat (a, b) longs when it fits the driver bound
+    * (see [[connectedComponents]]); None for a larger graph, non-long or
+    * null ids, or a negative threshold. One job: each task ships at most
+    * bound + 1 edges, the driver keeps at most bound of them, and the
+    * job is cancelled as soon as the bound is passed.
+    */
+  private def smallEdgeList(edges: DataFrame): Option[Array[Long]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val threshold = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold < 0 ||
+        !edges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType))
+      return None
+    val bound = math.min(threshold / 16, Int.MaxValue / 2 - 16L)
+    val perTask: Iterator[InternalRow] => Array[Long] = it => {
+      val b = Array.newBuilder[Long]
+      var n = 0L
+      var nulls = false
+      while (!nulls && n <= bound && it.hasNext) {
+        val r = it.next()
+        if (r.isNullAt(0) || r.isNullAt(1)) nulls = true
+        else { b += r.getLong(0); b += r.getLong(1); n += 1 }
+      }
+      if (nulls) null else b.result()
+    }
+    val sc = edges.sparkSession.sparkContext
+    val tag = s"graft-cc-edges-${java.util.UUID.randomUUID()}"
+    val kept = Array.newBuilder[Long]
+    var n = 0L
+    var fits = true
+    val qe = edges.queryExecution
+    sc.addJobTag(tag)
+    try {
+      // a named SQL execution, like a Dataset action, so engine-time
+      // listeners and the UI see the job that computes the edge cut
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+        sc.runJob(qe.toRdd, perTask, (_: Int, part: Array[Long]) =>
+          if (fits) {
+            if (part == null || n + part.length / 2 > bound) {
+              // too big (or a null id): cancel, so the tasks still to
+              // run ship nothing more to the driver
+              fits = false
+              kept.clear()
+              sc.cancelJobsWithTag(tag)
+            } else { kept ++= part; n += part.length / 2 }
+          })
+      }
+    } catch {
+      case _: org.apache.spark.SparkException if !fits => () // our own cancel
+    } finally sc.removeJobTag(tag)
+    if (fits) Some(kept.result()) else None
+  }
+
+  /** Union-find over the collected edges: ids sorted, so the root with
+    * the lowest index is the component's minimum id. Returns the local
+    * `(doc_id, cluster_id)` DataFrame with the loop path's schema.
+    */
+  private def minIdLabels(edges: DataFrame, flat: Array[Long]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val ids = flat.distinct
+    java.util.Arrays.sort(ids)
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var i = 0
+    while (i < flat.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, flat(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, flat(i + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 2
+    }
+    val rows = new java.util.ArrayList[Row](ids.length)
+    ids.indices.foreach(v => rows.add(Row(ids(v), ids(find(v)))))
+    System.err.println(s"[graft] connectedComponents solved on the driver: " +
+      s"${flat.length / 2} edges, ${ids.length} vertices")
+    // the loop's labels inherit the union of both endpoint columns'
+    // nullability; match it so the two paths are interchangeable
+    val nullable = edges.schema.fields.exists(_.nullable)
+    edges.sparkSession.createDataFrame(rows, StructType(Seq(
+      StructField("doc_id", LongType, nullable),
+      StructField("cluster_id", LongType, nullable))))
+  }
+
+  /** The distributed path of [[connectedComponents]]: iterative
+    * min-label propagation with pointer jumping. Each round every
+    * vertex takes the min of its own and its neighbors' labels, then
+    * compresses one indirection (label ← label-of-label), so
     * convergence needs O(log diameter) rounds instead of O(diameter) —
     * on a 100 TB corpus each saved round is a full shuffle over the
     * vertex set, and a pathological duplicate CHAIN (a~b~c~...~z) no
@@ -94,15 +214,9 @@ object Graph {
     * never reshuffles across rounds); the driver only ever collects one
     * convergence scalar per round.
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
+  private def labelPropagation(edges: DataFrame, maxIters: Int): DataFrame = {
     val ccT0 = System.nanoTime()
     def ccElapsed: String = f"${(System.nanoTime() - ccT0) / 1e9}%.1fs"
-    // Materialized: the symmetrizing union below consumes `pairs` in
-    // BOTH branches, and only exchange-rooted subtrees are reused — a
-    // pair pipeline ending in a join+filter (embedding-cosine pairs:
-    // the exact-cosine verification) would run twice without the cut.
-    val edges = pairs.select(col("doc_a"), col("doc_b"))
-      .materialized
     // No distinct needed on the union: pairs are unique with
     // doc_a < doc_b, so the forward branch (a<b) and the reversed one
     // (a>b) are disjoint — a distinct here would be one full extra

@@ -62,6 +62,75 @@ class GraphVectorSpec extends AnyFunSuite {
     assert(Graph.connectedComponents(pairsOf()).count() == 0)
   }
 
+  test("connectedComponents: driver union-find and the distributed loop agree") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val rnd = new scala.util.Random(11)
+    val graphs = Seq(
+      "chain" -> (1L until 40L).map(i => (i, i + 1)),
+      // the hub holds the LARGEST id: every leaf's label is the min leaf
+      "star" -> (1L to 30L).map(l => (l, 100L)),
+      "random" -> Seq.fill(120)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+        .filter { case (a, b) => a < b }.distinct,
+      "empty" -> Seq.empty[(Long, Long)])
+    // independent reference: relax min labels to a fixpoint
+    def reference(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      var lab = edges.flatMap { case (a, b) => Seq(a -> a, b -> b) }.toMap
+      var changed = true
+      while (changed) {
+        val next = edges.foldLeft(lab) { case (m, (a, b)) =>
+          val l = math.min(m(a), m(b)); m.updated(a, l).updated(b, l)
+        }
+        changed = next != lab
+        lab = next
+      }
+      lab
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    val ccSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("cluster_id", LongType)))
+    def run(edges: Seq[(Long, Long)], threshold: String): (Map[Long, Long], Boolean) = {
+      spark.conf.set(key, threshold)
+      try {
+        val df = Graph.connectedComponents(pairsOf(edges: _*))
+        assert(df.schema == ccSchema)
+        val onDriver = df.queryExecution.analyzed.collectFirst {
+          case l: LocalRelation => l }.isDefined
+        (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, onDriver)
+      } finally spark.conf.set(key, prev)
+    }
+    graphs.foreach { case (name, edges) =>
+      val (driver, onDriver) = run(edges, prev)
+      val (loop, inLoop) = run(edges, "-1")
+      assert(onDriver && !inLoop, s"$name: wrong path taken")
+      assert(driver == loop, s"$name: paths disagree")
+      assert(driver == reference(edges), s"$name: wrong labels")
+    }
+    // the bound is 16 bytes per edge: exactly fitting stays on the
+    // driver, one byte short keeps the loop — same labels either way
+    val chain = graphs.head._2
+    val (fit, fitOnDriver) = run(chain, (16 * chain.size).toString)
+    val (over, overOnDriver) = run(chain, (16 * chain.size - 1).toString)
+    assert(fitOnDriver && !overOnDriver)
+    assert(fit == over && fit.values.toSet == Set(1L))
+    // many partitions over the bound: the collect job is cancelled
+    // mid-flight and the loop still labels the whole chain
+    val wide = spark.range(1, 100, 1, 40)
+      .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
+    spark.conf.set(key, "16")
+    try {
+      val cc = Graph.connectedComponents(wide)
+      assert(cc.queryExecution.analyzed.collectFirst { case l: LocalRelation => l }.isEmpty)
+      assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        (1L to 100L).map(_ -> 1L).toMap)
+    } finally spark.conf.set(key, prev)
+    // a null id has no min-id label on the driver: the loop keeps it
+    val withNull = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(1L, 2L), Row(3L, null)), 2), pairSchema)
+    assert(Graph.connectedComponents(withNull).queryExecution.analyzed
+      .collectFirst { case l: LocalRelation => l }.isEmpty)
+  }
+
   test("mixture sampling: map-side, deterministic, rate-monotone nested subsets") {
     import graft.operators.Curation
     val docs = Tables.documents(spark, sf)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,6 +15,7 @@ import graft.operators.Similarity
   */
 class KmeansExprSpec extends AnyFunSuite {
   import TestSpark._
+  import KmeansExprSpec._
   graft.plans.GraftFunctions.register(spark) // composed forms use graft_dot
 
   private val dims = 8
@@ -45,7 +46,7 @@ class KmeansExprSpec extends AnyFunSuite {
     val cs = centroids(6)
     val got = df.select(col("vec_id"),
         Similarity.kmeansAssignExpr(col("embedding"), cs).as("a"),
-        Similarity.kmeansAssignExprComposed(col("embedding"), cs).as("b"))
+        kmeansAssignExprComposed(col("embedding"), cs).as("b"))
       .filter(col("a") =!= col("b"))
     assert(got.count() == 0, got.collect().mkString(", "))
   }
@@ -56,7 +57,7 @@ class KmeansExprSpec extends AnyFunSuite {
     Seq(1, 2, 4, 6, 9).foreach { p => // 9 > k exercises the clamp
       val got = df.select(col("vec_id"),
           Similarity.kmeansProbeCellsExpr(col("embedding"), cs, p).as("a"),
-          Similarity.kmeansProbeCellsExprComposed(col("embedding"), cs, p).as("b"))
+          kmeansProbeCellsExprComposed(col("embedding"), cs, p).as("b"))
         .filter(not(col("a") === col("b")))
       assert(got.count() == 0, s"probes=$p: " + got.collect().mkString(", "))
     }
@@ -110,5 +111,47 @@ class KmeansExprSpec extends AnyFunSuite {
         .toIntArray().toSeq
       assert(probes == scores.sorted.take(3).map(_._2))
     }
+  }
+}
+
+object KmeansExprSpec {
+
+  /** The pre-round-15 composed form of [[Similarity.kmeansAssignExpr]]:
+    * a `least()` fold over (‖c‖²−2·v·c, j) structs with the centroid
+    * norms as codegen-source literals. Every Lloyd iteration changes
+    * those constants, so this form recompiles its k×dims janino class
+    * per iteration (and past the 64 KB method limit falls back to
+    * interpreted evaluation), which is why the reference-object kernel
+    * replaced it on the query path. Parity reference only.
+    */
+  def kmeansAssignExprComposed(vecCol: Column, centroids: Array[Array[Double]]): Column = {
+    require(centroids.nonEmpty)
+    val structs = centroids.zipWithIndex.map { case (c, j) =>
+      val cc = c.foldLeft(0.0)((acc, x) => acc + x * x) // same fold as dotSql
+      struct(
+        (lit(cc) - lit(2.0) * call_function("graft_dot", vecCol, typedLit(c.toSeq)))
+          .as("s"),
+        lit(j).as("c"))
+    }
+    (if (structs.length == 1) structs.head
+     else least(structs.toIndexedSeq: _*)).getField("c")
+  }
+
+  /** Pre-round-15 composed form of [[Similarity.kmeansProbeCellsExpr]]:
+    * array_sort over the same (s, c) structs, first `nProbes` cells.
+    */
+  def kmeansProbeCellsExprComposed(vecCol: Column, centroids: Array[Array[Double]],
+                                   nProbes: Int): Column = {
+    require(centroids.nonEmpty)
+    val structs = centroids.zipWithIndex.map { case (c, j) =>
+      val cc = c.foldLeft(0.0)((acc, x) => acc + x * x)
+      struct(
+        (lit(cc) - lit(2.0) * call_function("graft_dot", vecCol, typedLit(c.toSeq)))
+          .as("s"),
+        lit(j).as("c"))
+    }
+    transform(
+      slice(array_sort(array(structs.toIndexedSeq: _*)), 1, nProbes),
+      x => x.getField("c"))
   }
 }

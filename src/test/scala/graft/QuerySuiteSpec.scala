@@ -55,6 +55,21 @@ class QuerySuiteSpec extends AnyFunSuite {
     assert(stale.isEmpty, s"pins for unregistered queries: ${stale.mkString(", ")}")
   }
 
+  test("Bench's pin parser skips slack and _-prefixed metadata keys") {
+    val (pins, slack) = Bench.parsePins(
+      """{"slack": 3.0, "_sensitivity": 1.5, "_note": "text", "q1": 0.25, "mr_wc": 2}""")
+    assert(slack == 3.0)
+    assert(pins == Map("q1" -> 0.25, "mr_wc" -> 2.0))
+  }
+
+  test("Bench's final stdout line fails loudly past its length bound") {
+    val ok = "x" * (Bench.FinalLineMaxChars - 1)
+    assert(Bench.checkedFinalLine(ok) == ok)
+    intercept[IllegalArgumentException] {
+      Bench.checkedFinalLine("x" * Bench.FinalLineMaxChars)
+    }
+  }
+
   test("the derived quota oracle's textual invariant is enforced") {
     // politeness_schedule_quota's oracle is the unbounded schedule's
     // SQL + an appended WHERE — valid ONLY while the base ends in the

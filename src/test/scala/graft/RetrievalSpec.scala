@@ -169,6 +169,30 @@ class RetrievalSpec extends AnyFunSuite {
       .count() == 0)
   }
 
+  test("semantic dedup on string ids still drops near-dups (type-agnostic salt)") {
+    // zero-padded, so string order is numeric order; a numeric pmod
+    // salt cannot take these ids
+    val emb = Tables.embeddings(spark, sf)
+      .select(format_string("v%06d", col("vec_id")).as("vec_id"), col("embedding"))
+    val minCos = 0.35
+    val survivors = Similarity.semanticDedup(emb, "vec_id", "embedding",
+      minCos = minCos)
+    val n = emb.count()
+    val kept = survivors.count()
+    assert(kept > 0 && kept < n, s"expected some drops: $kept of $n kept")
+    val withVec = survivors.join(emb, Seq("vec_id"))
+    val a = withVec.select(col("cluster_id"), col("vec_id").as("ida"),
+      col("embedding").as("va"))
+    val b = withVec.select(col("cluster_id"), col("vec_id").as("idb"),
+      col("embedding").as("vb"))
+    val offenders = a.join(b, Seq("cluster_id"))
+      .filter(col("ida") < col("idb") &&
+        round(graft.functions.VectorFunctions.cosine(col("va"), col("vb")), 6)
+          >= minCos)
+      .count()
+    assert(offenders == 0)
+  }
+
   test("streaming quality admission equals the batch gate; unknown sources pass") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -227,6 +227,44 @@ class SimilaritySpec extends AnyFunSuite {
     assert(Similarity.exactRowCount(mem) == 3L)
   }
 
+  test("exactRowCount follows count() when corrupt or missing files are ignored") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rowcount")
+    def parts = java.nio.file.Files.list(dir).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
+    def withConf[T](key: String)(body: => T): T = {
+      spark.conf.set(key, "true")
+      try body finally spark.conf.unset(key)
+    }
+    try {
+      spark.range(0, 10, 1, 2).toDF("x").write.mode("overwrite").parquet(dir.toString)
+      assert(parts.length == 2)
+      java.nio.file.Files.list(dir).toArray // checksums would mask the corruption
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.endsWith(".crc"))
+        .foreach(java.nio.file.Files.delete)
+      // explicit schema: no footer read before the file breaks
+      val df = spark.read.schema("x LONG").parquet(dir.toString)
+      java.nio.file.Files.write(parts(0), "not a parquet file".getBytes("UTF-8"))
+      withConf("spark.sql.files.ignoreCorruptFiles") {
+        assert(df.count() == 5L)
+        assert(Similarity.exactRowCount(df) == 5L)
+      }
+      // the file listing is fixed when the DataFrame is built, so a file
+      // deleted afterwards is missing at scan time
+      val df2 = spark.read.schema("x LONG").parquet(dir.toString)
+      java.nio.file.Files.delete(parts(0))
+      withConf("spark.sql.files.ignoreMissingFiles") {
+        assert(df2.count() == 5L)
+        assert(Similarity.exactRowCount(df2) == 5L)
+      }
+    } finally {
+      java.nio.file.Files.list(dir).toArray
+        .foreach(f => java.nio.file.Files.deleteIfExists(f.asInstanceOf[java.nio.file.Path]))
+      java.nio.file.Files.deleteIfExists(dir)
+    }
+  }
+
   test("minhashLsh ids-only band join ≡ the sig-carrying reference form (r16 restructure)") {
     // round 16 rebuilt minhashLsh so the band self-join ships
     // (doc_id, band, bkey) only and the agreement kernel runs once per
